@@ -305,7 +305,8 @@ def test_cli_curate_full_compose_stage_counts(spark, tmp_path, capsys, monkeypat
     """The full curate composition (exact dedup -> paragraph dedup ->
     gopher -> c4 -> dsir top-K -> budgeted sample -> shards): every stage
     count printed by the CLI is pinned on a planted corpus where each
-    stage does known work (BENCH/curate_bench.py is the sf0.1 form)."""
+    stage does known work (BENCH/CURATE.md records the same composition
+    at sf0.1)."""
     from pyspark.sql import functions as F
 
     line = (

@@ -233,31 +233,31 @@ def test_crawl_annotate_bounded_plan(spark, corpus, robots_df, seeds, media_tbl,
 def test_crawl_round_action_budget(spark, corpus, robots_df, seeds, monkeypatch):
     """VERDICT r1 #3: no per-round count() storms. A round issues a fixed
     handful of DRIVER ACTIONS — ranked checkpoint, frontier checkpoint,
-    filter-shard update checkpoint, plus one fixed-size filter-state collect
-    from round 1 on — with every counter riding observe() on those jobs
-    (r1 ran ~10 actions per round). Counted by instrumenting the action
-    entry points; Spark-job counts would over-read AQE stage materialization.
+    filter-shard update checkpoint, one filter-state size agg (the seen
+    lookup's auto switch), one per-partition row-count collect (skew stats
+    + partition lineage), plus one fixed-size filter-state collect from
+    round 1 on — with every counter riding observe() on those jobs (r1 ran
+    ~10 actions per round). Counted by instrumenting the action entry
+    points of the session's concrete DataFrame class (pyspark 4 overrides
+    them below `pyspark.sql.DataFrame`); Spark-job counts would over-read
+    AQE stage materialization.
     """
-    from pyspark.sql import DataFrame
-
+    df_cls = type(spark.range(0))
     calls = {"count": 0, "collect": 0, "localCheckpoint": 0, "first": 0}
     for name in list(calls):
-        orig = getattr(DataFrame, name)
+        orig = getattr(df_cls, name)
 
         def wrapped(self, *a, _n=name, _o=orig, **kw):
             calls[_n] += 1
             return _o(self, *a, **kw)
 
-        monkeypatch.setattr(DataFrame, name, wrapped)
+        monkeypatch.setattr(df_cls, name, wrapped)
 
-    run_crawl(
-        spark, corpus, seeds, robots_df, rounds=2, universe=UNIVERSE,
-        skew_stats=False,
-    )
-    total = sum(calls.values())
-    # 2 rounds: 3 checkpoints each + 1 collect (filter load, round 1) = 7
-    assert total <= 8, f"driver-action storm: {calls}"
-    assert calls["count"] == 0, f"count() crept back into the loop: {calls}"
+    run_crawl(spark, corpus, seeds, robots_df, rounds=2, universe=UNIVERSE)
+    # no count(); per round 3 checkpoints, 1 state-size first() (its
+    # collect counts too) and 1 partition-rows collect; round 1 adds the
+    # filter load
+    assert calls == {"count": 0, "collect": 5, "localCheckpoint": 6, "first": 2}, calls
 
 
 def test_two_phase_topk_equals_single_phase(spark, robots_df, corpus):
@@ -364,10 +364,9 @@ def test_crawl_bucketed_seen_equals_union_layout(spark, corpus, robots_df, seeds
     """VERDICT r2 #1: the bucketed-seen layout changes the anti-join's plan
     (no seen-side exchange), never its results — schedule and seen set are
     identical to the in-memory union layout."""
-    base = run_crawl(spark, corpus, seeds, robots_df, rounds=3, universe=UNIVERSE,
-                     skew_stats=False)
+    base = run_crawl(spark, corpus, seeds, robots_df, rounds=3, universe=UNIVERSE)
     buck = run_crawl(spark, corpus, seeds, robots_df, rounds=3, universe=UNIVERSE,
-                     skew_stats=False, out_dir=str(tmp_path / "ck"), bucketed_seen=True)
+                     out_dir=str(tmp_path / "ck"), bucketed_seen=True)
     sched = lambda r: (r.round, r.canonical_url, r.host, r.rnk)  # noqa: E731
     assert {sched(r) for r in base.schedule.collect()} == {
         sched(r) for r in buck.schedule.collect()
@@ -387,11 +386,11 @@ def test_crawl_bucketed_seen_resume(spark, corpus, robots_df, seeds, tmp_path):
     3 rounds reproduces the uninterrupted 3-round schedule and seen set."""
     full_dir, part_dir = str(tmp_path / "full"), str(tmp_path / "part")
     full = run_crawl(spark, corpus, seeds, robots_df, rounds=3, universe=UNIVERSE,
-                     skew_stats=False, out_dir=full_dir, bucketed_seen=True)
+                     out_dir=full_dir, bucketed_seen=True)
     run_crawl(spark, corpus, seeds, robots_df, rounds=2, universe=UNIVERSE,
-              skew_stats=False, out_dir=part_dir, bucketed_seen=True)
+              out_dir=part_dir, bucketed_seen=True)
     resumed = run_crawl(spark, corpus, seeds, robots_df, rounds=3, universe=UNIVERSE,
-                        skew_stats=False, out_dir=part_dir, bucketed_seen=True)
+                        out_dir=part_dir, bucketed_seen=True)
     assert [m.round for m in resumed.lineage] == [2]
     assert {(r.canonical_url, r.first_round) for r in full.seen.collect()} == {
         (r.canonical_url, r.first_round) for r in resumed.seen.collect()
@@ -405,10 +404,10 @@ def test_crawl_prune_salts_identical_schedule_and_queue(spark, corpus, robots_df
     """VERDICT r2 #2: the two-phase selection inside the LOOP is exact —
     schedule, seen set, and per-round lineage counts are identical with
     pruning on (default 16) and off."""
-    on = run_crawl(spark, corpus, seeds, robots_df, rounds=3, universe=UNIVERSE,
-                   skew_stats=False)  # default prune_salts=16
+    # default prune_salts=16
+    on = run_crawl(spark, corpus, seeds, robots_df, rounds=3, universe=UNIVERSE)
     off = run_crawl(spark, corpus, seeds, robots_df, rounds=3, universe=UNIVERSE,
-                    skew_stats=False, prune_salts=None)
+                    prune_salts=None)
     key = lambda r: (r.round, r.canonical_url, r.host, r.rnk)  # noqa: E731
     assert {key(r) for r in on.schedule.collect()} == {key(r) for r in off.schedule.collect()}
     assert {(r.canonical_url, r.first_round) for r in on.seen.collect()} == {
@@ -557,18 +556,17 @@ def test_crawl_mixed_layout_resume_keeps_all_seen(spark, corpus, robots_df, seed
     out = str(tmp_path / "ck")
     # rounds 0-1 in the union layout
     run_crawl(spark, corpus, seeds, robots_df, rounds=2, universe=UNIVERSE,
-              skew_stats=False, out_dir=out)
+              out_dir=out)
     # round 2 continues bucketed (writes only seen_delta)
     mid = run_crawl(spark, corpus, seeds, robots_df, rounds=3, universe=UNIVERSE,
-                    skew_stats=False, out_dir=out, bucketed_seen=True)
+                    out_dir=out, bucketed_seen=True)
     assert [m.round for m in mid.lineage] == [2]
     # resume AGAIN for round 3: seen must contain rounds 0-2 (the r2-layout
     # base snapshot plus the bucketed delta)
     cont = run_crawl(spark, corpus, seeds, robots_df, rounds=4, universe=UNIVERSE,
-                     skew_stats=False, out_dir=out, bucketed_seen=True)
+                     out_dir=out, bucketed_seen=True)
     assert [m.round for m in cont.lineage] == [3]
-    full = run_crawl(spark, corpus, seeds, robots_df, rounds=4, universe=UNIVERSE,
-                     skew_stats=False)
+    full = run_crawl(spark, corpus, seeds, robots_df, rounds=4, universe=UNIVERSE)
     assert {(r.canonical_url, r.first_round) for r in cont.seen.collect()} == {
         (r.canonical_url, r.first_round) for r in full.seen.collect()
     }
@@ -578,10 +576,9 @@ def test_crawl_shardjoin_lookup_identical_schedule(spark, corpus, robots_df, see
     """seen_lookup='shardjoin' (executor-side cogroup probe of the filter
     states, no driver collect/broadcast) produces the identical schedule
     and seen set to the broadcast-handle default."""
-    base = run_crawl(spark, corpus, seeds, robots_df, rounds=3, universe=UNIVERSE,
-                     skew_stats=False)
+    base = run_crawl(spark, corpus, seeds, robots_df, rounds=3, universe=UNIVERSE)
     sj = run_crawl(spark, corpus, seeds, robots_df, rounds=3, universe=UNIVERSE,
-                   skew_stats=False, seen_lookup="shardjoin")
+                   seen_lookup="shardjoin")
     key = lambda r: (r.round, r.canonical_url, r.rnk)  # noqa: E731
     assert {key(r) for r in base.schedule.collect()} == {key(r) for r in sj.schedule.collect()}
     assert {(r.canonical_url, r.first_round) for r in base.seen.collect()} == {
@@ -616,13 +613,13 @@ def test_seen_lookup_auto_switches_on_state_size(
     # limit 0: every measured state size exceeds it -> shardjoin from the
     # first round that has filter state (round 0 has none yet)
     sj = run_crawl(spark, corpus, seeds, robots_df, rounds=3, universe=UNIVERSE,
-                   skew_stats=False, seen_lookup="auto", broadcast_state_limit=0)
+                   seen_lookup="auto", broadcast_state_limit=0)
     assert calls["shardjoin"] == 2 and calls["broadcast"] == 0, calls
 
     calls.update(shardjoin=0, broadcast=0)
     # default limit (64 MB): tiny states stay on the broadcast fast path
     bc = run_crawl(spark, corpus, seeds, robots_df, rounds=3, universe=UNIVERSE,
-                   skew_stats=False, seen_lookup="auto")
+                   seen_lookup="auto")
     assert calls["shardjoin"] == 0 and calls["broadcast"] == 2, calls
 
     key = lambda r: (r.round, r.canonical_url, r.rnk)  # noqa: E731
@@ -641,7 +638,7 @@ def test_bucketed_seen_resume_reuses_table(spark, corpus, robots_df, seeds, tmp_
 
     out = str(tmp_path / "ck")
     run_crawl(spark, corpus, seeds, robots_df, rounds=2, universe=UNIVERSE,
-              skew_stats=False, out_dir=out, bucketed_seen=True)
+              out_dir=out, bucketed_seen=True)
     table_dir = os.path.join(out, "seen_table")
     before = {
         f: os.path.getmtime(os.path.join(table_dir, f))
@@ -654,7 +651,7 @@ def test_bucketed_seen_resume_reuses_table(spark, corpus, robots_df, seeds, tmp_
     assert os.path.isdir(table_dir)
 
     resumed = run_crawl(spark, corpus, seeds, robots_df, rounds=3, universe=UNIVERSE,
-                        skew_stats=False, out_dir=out, bucketed_seen=True)
+                        out_dir=out, bucketed_seen=True)
     assert [m.round for m in resumed.lineage] == [2]
     after = {
         f: os.path.getmtime(os.path.join(table_dir, f))
@@ -667,8 +664,7 @@ def test_bucketed_seen_resume_reuses_table(spark, corpus, robots_df, seeds, tmp_
     assert not changed, f"resume rewrote existing files: {changed}"
     assert len(after) > len(before), "round 2 delta was not appended"
     # and the reused table still matches the uninterrupted run
-    full = run_crawl(spark, corpus, seeds, robots_df, rounds=3, universe=UNIVERSE,
-                     skew_stats=False)
+    full = run_crawl(spark, corpus, seeds, robots_df, rounds=3, universe=UNIVERSE)
     assert {(r.canonical_url, r.first_round) for r in resumed.seen.collect()} == {
         (r.canonical_url, r.first_round) for r in full.seen.collect()
     }
@@ -686,7 +682,7 @@ def test_resume_round_rejects_gap_in_delta_chain(
 
     out = str(tmp_path / "ck")
     run_crawl(spark, corpus, seeds, robots_df, rounds=3, universe=UNIVERSE,
-              skew_stats=False, out_dir=out, bucketed_seen=True)
+              out_dir=out, bucketed_seen=True)
     assert resume_round(spark, out) == 2
     shutil.rmtree(os.path.join(out, "round=1", "seen_delta"))
     assert resume_round(spark, out) == 0

@@ -16,7 +16,9 @@ would not isolate on their own:
      materialize=False rows exactly.
   5. the scale-adaptive `<t>_fan` views: repartitioned exactly when the
      split estimate is below parallelism, and row-identical to the
-     canonical statements for the _FAN_QUERIES rewrites.
+     canonical statements for the _FAN_QUERIES rewrites; the estimate's
+     inputs (`_split_bytes` unit suffixes, `_est_splits` over partitioned
+     directories) read the layout the scan planner sees.
 """
 
 from __future__ import annotations
@@ -130,7 +132,7 @@ def test_tfidf_keywords_materialize_equals_recompute(spark):
     assert a  # the fixture must actually produce keywords
 
 
-def test_fan_views_adaptive_and_row_identical(spark):
+def test_fan_views_adaptive_and_row_identical(spark, monkeypatch):
     """r8 scale-adaptive fan-out: register_views publishes `<t>_fan` views
     that are repartitioned to defaultParallelism ONLY when the file-size
     estimate yields fewer splits than cores, and the _FAN_QUERIES rewrite
@@ -145,10 +147,6 @@ def test_fan_views_adaptive_and_row_identical(spark):
     assert fan.rdd.getNumPartitions() == n_par
     # same rows either way
     assert fan.count() == spark.table("documents").count()
-    # the condition is adaptive: a large-file estimate must NOT repartition
-    # (simulated by the estimate arithmetic itself)
-    split = dq._split_bytes(spark)
-    assert max(1, -(-(split * n_par) // split)) >= n_par  # big file -> no fan
     # a fanned query's rows equal the canonical (unfanned) statement's rows
     name = "fingerprint_winnow"
     fanned = dq.queries()[name](spark, sf)
@@ -157,3 +155,62 @@ def test_fan_views_adaptive_and_row_identical(spark):
     b = sorted(map(tuple, plain.collect()))
     assert a == b
     assert a  # the fixture must actually produce fingerprints
+
+    # the condition is adaptive: once the estimate reaches one split per
+    # core (a large file), the fan view keeps the base view's partitioning
+    base_parts = spark.table("documents").rdd.getNumPartitions()
+    assert base_parts < n_par  # else the check below could not tell
+    monkeypatch.setattr(dq, "_est_splits", lambda path, split: n_par)
+    dq._REGISTERED_VIEWS.clear()
+    try:
+        dq.register_views(spark, sf)
+        assert spark.table("documents_fan").rdd.getNumPartitions() == base_parts
+    finally:
+        # later register_views calls must rebuild the real fan views
+        dq._REGISTERED_VIEWS.clear()
+
+
+def test_split_bytes_parses_unit_suffixes(spark):
+    """spark.sql.files.maxPartitionBytes accepts size strings; '128MB' must
+    read as 128 MiB (not 128 bytes, which silently disabled the fan views)."""
+    from warc_metadata_sidecar_spark import driver_queries as dq
+
+    key = "spark.sql.files.maxPartitionBytes"
+    prior = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "128MB")
+        assert dq._split_bytes(spark) == 128 << 20
+        spark.conf.set(key, "1g")
+        assert dq._split_bytes(spark) == 1 << 30
+    finally:
+        spark.conf.set(key, prior)
+
+
+def test_est_splits_recurses_into_partition_dirs(spark, tmp_path):
+    """A hive-partitioned parquet directory is estimated from its part
+    files, not one split per `key=value/` subdirectory."""
+    import os
+
+    from warc_metadata_sidecar_spark import driver_queries as dq
+
+    path = str(tmp_path / "parted.parquet")
+    (
+        spark.range(600)
+        .withColumn("k", F.col("id") % 2)
+        .repartition(3)
+        .write.partitionBy("k")
+        .parquet(path)
+    )
+    parts = [
+        os.path.join(root, f)
+        for root, _, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet")
+    ]
+    assert len(parts) == 6 and os.path.exists(os.path.join(path, "_SUCCESS"))
+    assert dq._est_splits(path, 128 << 20) == 6
+    # a split smaller than the files counts each file's splits
+    split = 256
+    assert dq._est_splits(path, split) == sum(
+        -(-os.path.getsize(p) // split) for p in parts
+    )

@@ -298,7 +298,6 @@ def test_crawl_loop_hrefs_discovery(spark, tmp_path):
         discovery="hrefs",
         out_dir=out,
         use_bloom=False,
-        skew_stats=False,
     )
     assert [m.round for m in res.lineage] == [0]
     assert res.lineage[0].fetched == 1 and res.lineage[0].selected == 1
@@ -347,7 +346,6 @@ def test_crawl_loop_link_fn_override(spark, tmp_path):
         link_fn=only_about,
         out_dir=str(tmp_path / "ckpt2"),
         use_bloom=False,
-        skew_stats=False,
     )
     assert res.lineage[0].new_links == 1
     frontier = spark.read.parquet(f"{tmp_path}/ckpt2/round=0/frontier")

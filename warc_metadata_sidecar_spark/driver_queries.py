@@ -60,30 +60,32 @@ _FAN_VIEW_TABLES = ("documents", "embeddings")
 
 
 def _split_bytes(spark: SparkSession) -> int:
-    try:
-        v = str(spark.conf.get("spark.sql.files.maxPartitionBytes"))
-        digits = "".join(c for c in v if c.isdigit())
-        return int(digits) if digits else 128 << 20
-    except Exception:
-        return 128 << 20
+    """spark.sql.files.maxPartitionBytes in bytes, read through Spark's typed
+    SQLConf so unit suffixes ('128MB', '1g') parse exactly as the scan
+    planner parses them."""
+    return int(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
 
 
 def _est_splits(path: str, split: int) -> int:
     """Lower bound on the scan's input partitions from the file layout:
-    sum of per-file split counts, directory-aware (a multi-file parquet
-    DIRECTORY — the shape of larger generated SFs — already fans across
-    its files, so os.path.getsize on the dir entry must not undercount)."""
-    if os.path.isdir(path):
-        est = 0
-        for name in os.listdir(path):
+    sum of per-file split counts over every data file under `path`,
+    recursing into hive-partition subdirectories (`key=value/`). A
+    multi-file or partitioned parquet DIRECTORY already fans across its
+    files, so counting a directory entry as one split would undercount.
+    Names starting with '_' or '.' (markers, checksums) are skipped."""
+    if not os.path.isdir(path):
+        return max(1, -(-os.path.getsize(path) // split))
+    est = 0
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for name in files:
             if name.startswith(("_", ".")):
                 continue
             try:
-                est += max(1, -(-os.path.getsize(os.path.join(path, name)) // split))
+                est += max(1, -(-os.path.getsize(os.path.join(root, name)) // split))
             except OSError:
                 est += 1
-        return max(1, est)
-    return max(1, -(-os.path.getsize(path) // split))
+    return max(1, est)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -3,19 +3,24 @@ discover -> checkpoint (N5/N6/N7).
 
 Iterative batch over table snapshots, not Structured Streaming: the north
 rule demands reproducible crawl ordering, and deterministic rounds make
-ordering a pure data property (SURVEY.md §1.2, §7.4). Each round is one
-Spark job; the driver loop only moves tiny metric scalars — all row data
-stays distributed.
+ordering a pure data property (SURVEY.md §1.2, §7.4). The driver loop only
+moves tiny metric scalars — all row data stays distributed.
 
-Driver-action budget (VERDICT r1 #3): metrics ride `observe()` on the plans
-that run anyway, so a round executes exactly THREE jobs —
+Driver actions (VERDICT r1 #3): counts ride `observe()` on the plans that
+run anyway, so a round has three materializations —
   1. ranked checkpoint (carries candidate/selected/carryover observations),
   2. frontier checkpoint (carries fetched/new-link observations),
-  3. sharded filter update (cost O(|round delta| + shards), never O(|seen|)).
+  3. sharded filter update (cost O(|round delta| + shards), never O(|seen|)),
+plus one small per-partition row count of the checkpointed frontier (the
+skew stats and the partition_lineage rows) and, with out_dir, the snapshot
+writes. Each materialization runs several Spark jobs (AQE submits every
+shuffle stage as its own job): the traced benchmark measured 37.5 jobs
+per round (`crawl.jobs_per_round`, cmd_crawl's arguments, 4-core VM).
+Per-round jobs and shuffle bytes come from Spark's event log in that run:
+`python3 perfbench/run.py --workload crawl-rounds --seed 2 --seconds 4 --trace 1`.
 `seen` is never separately materialized: it is a lazy union of scheduled
 filters over the per-round checkpointed ranked frames (each union leg is an
-in-memory scan). Skew stats come from an optional 4th cheap agg over the
-checkpointed (in-memory) frontier, on by default for lineage fidelity.
+in-memory scan).
 
 URL-seen (N2): the tiered bloom+cuckoo filter lives in a sharded `filters`
 table updated INCREMENTALLY each round with only that round's newly
@@ -39,6 +44,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
+import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -481,42 +487,6 @@ class RoundMetrics:
     seen_after: int
     max_partition_rows: int = 0
     min_partition_rows: int = 0
-    # per-round executor shuffle bytes (read/write deltas from the status
-    # API) — the N2 scale evidence: with the bucketed seen layout these stay
-    # flat as |seen| grows. -1 = not measured (spark.ui.enabled=false).
-    shuffle_read_bytes: int = -1
-    shuffle_write_bytes: int = -1
-
-
-def shuffle_totals(spark: SparkSession) -> tuple[int, int] | None:
-    """Cumulative (shuffle_read_bytes, shuffle_write_bytes) across all stages
-    from the status REST API; None when the UI is disabled.
-
-    The endpoint only lists retained stages (spark.ui.retainedStages,
-    default 1000): once a long run evicts stages, cumulative sums can
-    SHRINK between samples — callers must treat a negative delta as
-    unmeasured (run_crawl records -1), and measurement sessions should
-    raise retainedStages (BENCH/seen_shuffle.py does)."""
-    import json as _json
-    import urllib.request
-
-    ui = spark.sparkContext.uiWebUrl
-    if not ui:
-        return None
-    app_id = spark.sparkContext.applicationId
-    try:
-        # short timeout: a hung UI endpoint must not block the crawl loop
-        # (the except only catches errors, not hangs)
-        with urllib.request.urlopen(
-            f"{ui}/api/v1/applications/{app_id}/stages", timeout=5
-        ) as fh:
-            stages = _json.load(fh)
-    except Exception:
-        return None
-    return (
-        sum(s.get("shuffleReadBytes", 0) for s in stages),
-        sum(s.get("shuffleWriteBytes", 0) for s in stages),
-    )
 
 
 def _obs_int(obs: Observation, key: str, fallback_df: DataFrame) -> int:
@@ -556,21 +526,17 @@ class CrawlResult:
     lineage: list[RoundMetrics] = field(default_factory=list)
 
 
-def _partition_rows(df: DataFrame) -> DataFrame:
-    """(partition, rows) over a checkpointed frame — the per-partition
-    lineage the north rule asks for (cheap: in-memory scan, 1 agg)."""
-    return df.groupBy(F.spark_partition_id().alias("partition")).agg(
-        F.count(F.lit(1)).alias("rows")
-    )
-
-
-def _skew_stats(df: DataFrame) -> tuple[int, int]:
-    rows = (
-        _partition_rows(df)
-        .agg(F.max("rows").alias("mx"), F.min("rows").alias("mn"))
-        .first()
-    )
-    return (rows.mx or 0, rows.mn or 0)
+def _partition_rows(df: DataFrame) -> list[tuple[int, int]]:
+    """[(partition, rows)] of a checkpointed frame, collected in one small
+    agg job (in-memory scan; at most one row per partition) — the
+    per-partition lineage the north rule asks for. The round's skew stats
+    and its partition_lineage snapshot both come from this one list."""
+    return [
+        (r.partition, r.rows)
+        for r in df.groupBy(F.spark_partition_id().alias("partition"))
+        .agg(F.count(F.lit(1)).alias("rows"))
+        .collect()
+    ]
 
 
 def _ckpt_dir(out_dir: str, rnd: int, name: str) -> str:
@@ -640,7 +606,6 @@ def run_crawl(
     media: DataFrame | None = None,
     out_dir: str | None = None,
     num_shards: int = DEFAULT_SHARDS,
-    skew_stats: bool = True,
     bucketed_seen: bool = False,
     prune_salts: int | None = 16,
     seen_lookup: str = "auto",
@@ -800,7 +765,6 @@ def run_crawl(
     state_bytes = _filters_state_bytes(filters_df) if measure_state else 0
 
     for rnd in range(start_round, rounds):
-        shuffle_before = shuffle_totals(spark)
         # N2: tiered prefilter served from the sharded filters table —
         # loaded (fixed-size states), never rebuilt from the seen set.
         # 'shardjoin' probes the states where they live (cogroup, no
@@ -948,15 +912,8 @@ def run_crawl(
             if measure_state:
                 state_bytes = _filters_state_bytes(filters_df)
 
-        mx, mn = _skew_stats(frontier) if skew_stats else (0, 0)
-        shuffle_after = shuffle_totals(spark)
-        sr, sw = (
-            (shuffle_after[0] - shuffle_before[0], shuffle_after[1] - shuffle_before[1])
-            if shuffle_before is not None and shuffle_after is not None
-            else (-1, -1)
-        )
-        if sr < 0 or sw < 0:  # stage eviction between samples: unmeasured
-            sr, sw = -1, -1
+        part_rows = _partition_rows(frontier)
+        counts = [n for _, n in part_rows]
         lineage.append(
             RoundMetrics(
                 round=rnd,
@@ -965,10 +922,8 @@ def run_crawl(
                 fetched=n_fetched,
                 new_links=n_links,
                 seen_after=n_seen,
-                max_partition_rows=mx,
-                min_partition_rows=mn,
-                shuffle_read_bytes=sr,
-                shuffle_write_bytes=sw,
+                max_partition_rows=max(counts, default=0),
+                min_partition_rows=min(counts, default=0),
             )
         )
         schedules.append(selected)
@@ -992,9 +947,15 @@ def run_crawl(
             lineage_df = spark.createDataFrame([vars(m) for m in lineage[-1:]])
             lineage_df.write.mode("append").parquet(os.path.join(out_dir, "lineage"))
             # N6: per-partition lineage of the checkpointed frontier
-            _partition_rows(frontier).withColumn("round", F.lit(rnd)).write.mode(
-                "append"
-            ).parquet(os.path.join(out_dir, "partition_lineage"))
+            # from pandas, not a row list: the list path parallelizes
+            # through Python workers, the Arrow path stays in the JVM
+            spark.createDataFrame(
+                pd.DataFrame(
+                    [(p, n, rnd) for p, n in part_rows],
+                    columns=["partition", "rows", "round"],
+                ),
+                "partition int, rows long, round int",
+            ).write.mode("append").parquet(os.path.join(out_dir, "partition_lineage"))
 
     if schedules:
         schedule = schedules[0]

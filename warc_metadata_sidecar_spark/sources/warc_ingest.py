@@ -4,12 +4,12 @@ The reference iterates `warcio.ArchiveIterator(stream, arc2warc=True)` per
 file (warc_metadata_sidecar.py:192,205). The distributed ingest is:
 
     spark.read.format('binaryFile').load('*.warc.gz')
-      -> mapInPandas(parse_warc_file)      # one warcio pass per file split
+      -> mapInPandas(parse_warc_bytes per file)  # ingest_warc_files
       -> documents rows (schema.DOCUMENTS)
 
-warcio is not in this container, so the parser is gated behind an import-try
-and unit-tested with a minimal built-in WARC text parser that handles the
-uncompressed single-record shape of the reference's test fixtures. ARC
+parse_warc_bytes is the only parser: a built-in, binary-safe WARC/ARC
+reader (gzip members, Content-Length framing, ARC v1) with no warcio
+dependency, so an installed warcio never changes the ingested rows. ARC
 detection mirrors the filename regex (warc_metadata_sidecar.py:35,186-189):
 `is_arc` becomes a boolean column, not a file-level code branch.
 """
@@ -20,53 +20,10 @@ import re
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from warc_metadata_sidecar_spark import schema
 
 ARC_NAME = re.compile(r".*\.arc(\.gz)?$")
-
-try:  # pragma: no cover - warcio not in the sandbox image
-    from warcio.archiveiterator import ArchiveIterator  # type: ignore
-
-    HAVE_WARCIO = True
-except ImportError:
-    ArchiveIterator = None
-    HAVE_WARCIO = False
-
-
-def _parse_with_warcio(path: str, data: bytes) -> list[dict]:  # pragma: no cover
-    import io
-
-    rows = []
-    is_arc = bool(ARC_NAME.match(path))
-    for record in ArchiveIterator(io.BytesIO(data), arc2warc=True):
-        payload = record.content_stream().read()
-        text = payload.decode("utf-8", "replace")
-        rows.append(
-            {
-                "doc_id": record.rec_headers.get_header("WARC-Record-ID"),
-                "spans": [{"kind": "text", "text": text, "media_ref": None, "offset": 0}],
-                "url": record.rec_headers.get_header("WARC-Target-URI"),
-                "warc_date": None,
-                "rec_type": record.rec_type,
-                "payload_digest": None
-                if is_arc
-                else record.rec_headers.get_header("WARC-Payload-Digest"),
-                "warcinfo_id": None
-                if is_arc
-                else record.rec_headers.get_header("WARC-Warcinfo-ID"),
-                "http_status": record.http_headers.get_statuscode()
-                if record.http_headers
-                else None,
-                "is_arc": is_arc,
-                "source_file": path.rsplit("/", 1)[-1],
-                "charset_head": _charset_head(payload),
-            }
-        )
-    return rows
-
-
 _HDR = re.compile(r"^([A-Za-z0-9-]+): *(.*)$")
 
 
@@ -195,7 +152,7 @@ def _arc_records(data: bytes) -> list[tuple[list[str], bytes]]:
 
 
 def parse_warc_bytes(path: str, data: bytes) -> list[dict]:
-    """WARC/ARC bytes -> documents rows (fallback when warcio is absent).
+    """WARC/ARC bytes -> documents rows (the one ingest parser).
 
     Handles the reference's full input surface (warc_metadata_sidecar.py:
     192,205 via warcio ArchiveIterator(arc2warc=True)):
@@ -207,8 +164,6 @@ def parse_warc_bytes(path: str, data: bytes) -> list[dict]:
         mapping asserted by reference tests/test_warc_metadata_sidecar.py:
         188-197).
     """
-    if HAVE_WARCIO:  # pragma: no cover
-        return _parse_with_warcio(path, data)
     if data[:2] == b"\x1f\x8b":
         import gzip
 
